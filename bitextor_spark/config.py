@@ -162,16 +162,10 @@ class CrawlConfig:
     # the walk exchange.
     rank_excess_rows: int = 2_000_000
 
-    # engine partitioning
+    # inert: the engine's seen check is the exact anti-join and reads
+    # neither; kept only because perfbench/crawl.py sets both
     num_host_shards: int = 32
-    bloom_bits_per_shard: int = 1 << 20  # 128 KiB per shard
-    bloom_num_hashes: int = 5
-    # total-bitmap-bytes gate for the broadcast seen-check: while
-    # n_shards × bits/8 stays under this, the folded shard bitmaps ride
-    # ONE driver broadcast per compaction and the per-epoch flag pass is
-    # a narrow mapInArrow (no exchange, no shard sort); past it (north-
-    # star multi-GB bitmaps) the cogrouped-Arrow path runs instead.
-    bloom_broadcast_bytes: int = 64 << 20
+    bloom_bits_per_shard: int = 1 << 20
 
     # payload verification
     psnr_threshold_db: float = 40.0

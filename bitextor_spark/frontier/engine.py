@@ -10,8 +10,8 @@ One epoch = one Spark job pipeline:
      (RE2-classified in-batch: resolve+canonicalize+explode+page dedup)
      ──scope rules (JVM exprs) + ONE groupBy(url)──► first-discoverer
      winner, in-scope dupe count, per-host reject count (fused pass)
-     ──bloom prefilter (broadcast probe under the size gate, cogrouped
-     Arrow above it) + base-presence left join + delta anti-join──►
+     ──exact URL-seen check: anti-join vs the persisted base url_hash
+     set, then vs the delta log's keys (broadcast under the gate)──►
      admitted (pinned once; the commit writes branch off it)
      ──► frontier ∪ admitted ; snapshot commit (atomic manifest);
      per-host metrics written BEHIND the commit (one tagged-union agg,
@@ -27,10 +27,10 @@ the single-threaded simulator in tests/test_frontier_parity.py.
 Skew: the per-host top-k prefix bounds any mega-host's contribution to an
 epoch at the politeness ceiling (window_ms / min_delay + retries), so the
 walk's host segment for the hottest host is O(hundreds) of rows no matter
-how many billions of its URLs are queued; the bloom shards are uniform by
-url-hash. Frontier state lives in snapshot tables (sources/snapshots.py);
-every epoch is resumable (kill → rerun uncommitted epoch, identical by the
-virtual clock).
+how many billions of its URLs are queued; the seen check shuffles on the
+uniform url-hash. Frontier state lives in snapshot tables
+(sources/snapshots.py); every epoch is resumable (kill → rerun uncommitted
+epoch, identical by the virtual clock).
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bitextor_spark.config import CrawlConfig
-from bitextor_spark.frontier import seen as seen_mod
 from bitextor_spark.frontier.politeness import schedule_host_arrays
 from bitextor_spark.plans.scope import apply_scope
 from bitextor_spark.plans.topk import per_key_topk_passthrough
@@ -71,12 +70,6 @@ HOST_STATE_SCHEMA = "host string, next_allowed_ms long"
 # memory, same discipline as the delta broadcast gate)
 _HOT_HOST_GATE = 1024
 ROBOTS_STATE_SCHEMA = "host string, crawl_delay_s int, fetched_ms long"
-METRIC_COLS = ("fetched", "errors", "skipped_seen", "skipped_scope", "queued")
-
-
-def _host_col(url_col):
-    # try_: Spark 4's plain parse_url THROWS on URLs java.net.URI rejects
-    return F.try_parse_url(url_col, F.lit("HOST"))
 
 
 def _parquet_rows(path: str) -> int:
@@ -114,6 +107,8 @@ class FrontierEngine:
         pages: DataFrame,
         robots: DataFrame,
         seeds: DataFrame,
+        # accepted and ignored (the seen check is always the exact
+        # anti-join): perfbench/crawl.py still passes use_bloom=True
         use_bloom: bool = True,
         images: DataFrame | None = None,
         verify_payloads: bool = False,
@@ -138,7 +133,6 @@ class FrontierEngine:
             robots_versions.cache() if robots_versions is not None else None
         )
         self.seeds = seeds
-        self.use_bloom = use_bloom
         # image+caption payload table (input_hint shape); verified per fetch
         # wave in Arrow batches when verify_payloads is on (M4 invariant)
         self.images = images.cache() if images is not None else None
@@ -169,8 +163,6 @@ class FrontierEngine:
         except Exception:
             pass
         self._epoch_pins: list[DataFrame] = []
-        self._bloom_bcast = None  # per-compaction flag broadcast cache
-        self._bloom_bcast_future = None  # in-flight post-compaction rebuild
         # (path, future, pins) of a metrics delta written behind its
         # epoch's commit; registered at the next commit or flushed
         self._pending_metrics = None
@@ -204,61 +196,6 @@ class FrontierEngine:
                 pass
         self._epoch_pins = []
 
-    def _bloom_gate_ok(self) -> bool:
-        cfg = self.cfg
-        total = cfg.num_host_shards * (cfg.bloom_bits_per_shard // 8)
-        return total <= cfg.bloom_broadcast_bytes
-
-    def _bloom_flag_broadcast(self):
-        """Broadcast of the folded bloom shard blobs for the narrow flag
-        pass, rebuilt once per COMPACTION (the only event that changes the
-        base bitmaps — between compactions admissions live in the
-        bloom_pending delta, which the admission path anti-joins exactly).
-        Returns None when the total bitmap size exceeds
-        ``cfg.bloom_broadcast_bytes`` (north-star multi-GB bitmaps): the
-        cogrouped-Arrow flag path runs instead.
-
-        The collect+broadcast never lands on the epoch's serial path: it
-        prebuilds at bootstrap, and after a compaction a background thread
-        rebuilds it while the next epoch's candidate/walk/discovery phases
-        run (the flag pass, its only consumer, comes late in the epoch)."""
-        if not self._bloom_gate_ok():
-            return None
-        if self._bloom_bcast is None and self._bloom_bcast_future is not None:
-            self._bloom_bcast = self._bloom_bcast_future.result()
-            self._bloom_bcast_future = None
-        if self._bloom_bcast is None:
-            self._bloom_bcast = seen_mod.broadcast_blooms(
-                self.spark, self._load("blooms")
-            )
-        return self._bloom_bcast
-
-    def _rebuild_bloom_broadcast_async(self) -> None:
-        """Kick off the post-compaction broadcast rebuild off-thread."""
-        if not self._bloom_gate_ok():
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        self._bloom_bcast_future = pool.submit(
-            seen_mod.broadcast_blooms, self.spark, self._load("blooms")
-        )
-        pool.shutdown(wait=False)
-
-    def _invalidate_bloom_broadcast(self) -> None:
-        if self._bloom_bcast_future is not None:
-            try:
-                self._bloom_bcast_future.result().destroy()
-            except Exception:
-                pass
-            self._bloom_bcast_future = None
-        if self._bloom_bcast is not None:
-            try:
-                self._bloom_bcast.destroy()
-            except Exception:
-                pass
-            self._bloom_bcast = None
-
     # ------------------------------------------------------------------ #
     # bootstrap / resume                                                  #
     # ------------------------------------------------------------------ #
@@ -269,8 +206,6 @@ class FrontierEngine:
         # synthesizing/caching the world is setup, not crawl work
         self.pages.count()
         if self.catalog.latest_snapshot_id() is not None:
-            if self.use_bloom:
-                self._rebuild_bloom_broadcast_async()  # resume: warm off-epoch
             return
         cfg = self.cfg
         # materialize the (tiny) seed pipeline once: every downstream action
@@ -338,30 +273,17 @@ class FrontierEngine:
                 F.lit(1.0).alias("priority"),
                 F.lit(0).alias("updated_epoch"),
             )
-        ).localCheckpoint()  # reused by host_state, blooms, commit, count
+        ).localCheckpoint()  # reused by host_state, commit, count
         host_state = frontier.select("host").distinct().withColumn(
             "next_allowed_ms", F.lit(0).cast("long")
         )
-        replace = {"frontier": frontier, "host_state": host_state,
-                   "seed_domains": seed_domains}
-        if self.use_bloom:
-            blooms = seen_mod.update_blooms(
-                seen_mod.empty_blooms(self.spark),
-                frontier.select("url_hash"),
-                cfg.num_host_shards, cfg.bloom_bits_per_shard,
-                cfg.bloom_num_hashes,
-            )
-            replace["blooms"] = blooms
         self.catalog.commit(
-            replace=replace,
+            replace={"frontier": frontier, "host_state": host_state,
+                     "seed_domains": seed_domains},
             meta={"epoch": 0, "total_fetched": 0, "seq_offset": 0,
                   "queued": (n_seeds := frontier.count()),
                   "frontier_rows": n_seeds, "done": False},
         )
-        if self.use_bloom:
-            # prebuild the flag broadcast at setup time so epoch 0 never
-            # pays the collect on its serial path
-            self._rebuild_bloom_broadcast_async()
 
     def _with_global_seq(
         self, events: DataFrame, n_events: int, seq_offset: int
@@ -427,8 +349,6 @@ class FrontierEngine:
         "robots_state": ROBOTS_STATE_SCHEMA,
         "robots_state_delta": ROBOTS_STATE_SCHEMA,
         "seed_domains": "reg_domain string",
-        "blooms": seen_mod.BLOOM_SCHEMA,
-        "bloom_pending": "url_hash long",
         "fetch_log": EVENT_SCHEMA + ", epoch int",
         "metrics": (
             "epoch int, host string, fetched bigint, errors bigint, "
@@ -663,10 +583,10 @@ class FrontierEngine:
     def _base_urls(self) -> DataFrame:
         """url_hash set of the frontier BASE, hash-partitioned + sorted +
         persisted ACROSS epochs — the base is immutable between
-        compactions, so the per-epoch maybe-seen anti-join must not pay an
+        compactions, so the per-epoch seen anti-join must not pay an
         O(frontier) exchange-and-sort every epoch. The persisted layout
         (HashPartitioning on url_hash, sorted within partitions) is reused
-        by the sort-merge anti-join: only the small maybe side shuffles.
+        by the sort-merge anti-join: only the small candidate side shuffles.
         Rebuilt when the manifest's base paths change (compaction or
         resume); recomputable lineage (persist, not checkpoint), so
         executor loss re-reads parquet instead of failing the epoch."""
@@ -1336,75 +1256,26 @@ class FrontierEngine:
             )
             .withColumn("url_hash", F.xxhash64("url_canon"))
         )
-        # --- seen check: bloom prefilter + exact anti-join on the residue ---
-        # The flag cogroup reads the pinned aggregate (narrow filter +
-        # projection); what pins is the ADMITTED set, because THREE
-        # commit-pool writes (frontier_delta, bloom_pending, metrics'
-        # queued counter) branch off it — unpinned they would each
-        # re-evaluate the flag cogroup and both anti-joins concurrently.
-        # The per-host dupe/unique counters need only pre-flag columns, so
-        # they read the pinned aggregate directly.
-        if self.use_bloom:
-            # n_disc drops BEFORE the flag pass: the dupe counter is read
-            # from the pinned aggregate, not the flag output, so it must
-            # not ride the Arrow transfer through the Python flag pass
-            bcast = self._bloom_flag_broadcast()
-            if bcast is not None:
-                # bitmaps under the size gate: one broadcast per
-                # compaction, per-epoch flag is a NARROW mapInArrow — no
-                # shard exchange, no cogroup sort in the epoch DAG
-                flagged = seen_mod.flag_maybe_seen_via_broadcast(
-                    grouped.drop("n_disc"), bcast, cfg.num_host_shards,
-                    cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
-                )
-            else:
-                flagged = seen_mod.flag_maybe_seen(
-                    grouped.drop("n_disc"), self._load("blooms"),
-                    cfg.num_host_shards,
-                    cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
-                )
-            # presence = in base OR in delta log. The base check is ONE
-            # left join carrying a presence marker (kept rows: bloom-miss
-            # OR base-miss) rather than a definitely-new ∪ anti-join(maybe)
-            # union — a union would reference the unpinned cogroup from two
-            # branches of the pin job and evaluate the Python flag pass
-            # twice. A bloom-miss row can't be in the base (that is the
-            # bloom's guarantee), so joining it costs nothing semantically;
-            # the base side reuses the cross-epoch persisted url_hash
-            # layout, the delta side stays a broadcast (gated) — never a
-            # fresh O(frontier) exchange per epoch. The delta check covers
-            # bloom-miss rows too: blooms are merge-on-read (folded only at
-            # compaction), so a bloom miss proves absence from the BASE
-            # only — admissions since the last compaction live in the
-            # delta log alone.
-            admitted = (
-                flagged.join(
-                    self._base_urls().withColumn("_in_base", F.lit(True)),
-                    "url_hash", "left",
-                )
-                .filter(~F.col("maybe_seen") | F.col("_in_base").isNull())
-                .drop("maybe_seen", "_in_base")
+        # --- seen check: exact anti-join (Heritrix's URL-seen filter is an
+        # exact set, BdbUriUniqFilter) ---
+        # presence = in base OR in delta log (any version proves it, see
+        # the MOR notes above). The base side reuses the cross-epoch
+        # persisted url_hash layout, so only the candidates shuffle; the
+        # delta side is the changed-key set, broadcast under the gate —
+        # never a fresh O(frontier) exchange per epoch. n_disc drops first:
+        # the dupe counter reads the pinned aggregate, not this output.
+        admitted = grouped.drop("n_disc").join(
+            self._base_urls(), "url_hash", "left_anti"
+        )
+        if latest is not None:
+            admitted = admitted.join(
+                self._delta_hint(latest.select("url_hash")),
+                "url_hash", "left_anti",
             )
-            if latest is not None:
-                admitted = admitted.join(
-                    self._delta_hint(latest.select("url_hash")),
-                    "url_hash", "left_anti",
-                )
-        else:
-            admitted = grouped.drop("n_disc").join(
-                self._base_urls(), "url_hash", "left_anti"
-            )
-            if latest is not None:
-                admitted = admitted.join(
-                    self._delta_hint(latest.select("url_hash")),
-                    "url_hash", "left_anti",
-                )
-        # Pin the admitted set (eager localCheckpoint — measured better
-        # than fusing this pin with the bloom_pending delta write: staging
-        # that write here serializes it, while in the commit pool it
-        # overlaps the other table writes for free).
-        # the admission counter rides the pin's materialization (the other
-        # half of the former metrics-write observation)
+        # Pin the admitted set: the frontier write and the metrics' queued
+        # counter both branch off it, and unpinned each would re-run both
+        # anti-joins. The admission counter rides the pin's
+        # materialization.
         obs_ad = Observation()
         admitted = self._pin(
             admitted.observe(obs_ad, F.count(F.lit(1)).alias("q"))
@@ -1575,27 +1446,6 @@ class FrontierEngine:
                 append["robots_state_delta"] = robots_eff.filter(
                     "_refreshed"
                 ).select("host", "crawl_delay_s", "fetched_ms")
-        if self.use_bloom:
-            # merge-on-read blooms: per epoch only the admitted url hashes
-            # append (O(admissions) — at the north-star the shard bitmaps
-            # are GBs and a per-epoch rewrite is pure non-scaling fixed
-            # cost); the bitmaps fold at compaction, the same cadence that
-            # resets the delta log. Exactness holds between folds because
-            # the admission path anti-joins the delta log for EVERY
-            # candidate, bloom-hit or not (see the seen check above).
-            if compact:
-                pending = self._deltas("bloom_pending")
-                new_hashes = admitted.select("url_hash")
-                if pending is not None:
-                    new_hashes = new_hashes.unionByName(pending)
-                replace["blooms"] = seen_mod.update_blooms(
-                    self._load("blooms"), new_hashes,
-                    cfg.num_host_shards, cfg.bloom_bits_per_shard,
-                    cfg.bloom_num_hashes,
-                )
-                drop.append("bloom_pending")
-            else:
-                append["bloom_pending"] = admitted.select("url_hash")
         if fetch_log_extra is not None:
             append["fetch_verify"] = fetch_log_extra
 
@@ -1668,13 +1518,6 @@ class FrontierEngine:
         ]
         self._release_pins()
         self._pending_metrics = (metrics_path, metrics_future, metrics_pins)
-        if compact and self.use_bloom:
-            # the commit above replaced the bloom base: next epoch's flag
-            # pass must see the folded bitmaps, not the stale broadcast —
-            # rebuild in the background while the next epoch's early
-            # phases run (the flag pass comes late in the epoch)
-            self._invalidate_bloom_broadcast()
-            self._rebuild_bloom_broadcast_async()
         self.last_timings = {k: v for k, v in _t.items() if k != '_start'}
         tracker = self.spark.sparkContext.statusTracker()
         try:
@@ -1693,15 +1536,20 @@ class FrontierEngine:
         self.bootstrap()
         stats: list[EpochStats] = []
         limit = max_epochs if max_epochs is not None else self.cfg.max_epochs
-        while True:
-            meta = self.meta()
-            if meta.get("done") or int(meta["epoch"]) >= limit:
-                break
-            st = self.run_epoch()
-            stats.append(st)
-            if st.attempts == 0 and st.queued_remaining == 0:
-                break
-        self.flush_pending_metrics()
+        try:
+            while True:
+                meta = self.meta()
+                if meta.get("done") or int(meta["epoch"]) >= limit:
+                    break
+                st = self.run_epoch()
+                stats.append(st)
+                if st.attempts == 0 and st.queued_remaining == 0:
+                    break
+        finally:
+            # an epoch that raises must not orphan the last committed
+            # epoch's write-behind metrics (the staged file is known only
+            # to this process)
+            self.flush_pending_metrics()
         return stats
 
     # convenience readers -------------------------------------------------
@@ -1733,9 +1581,9 @@ class FrontierEngine:
 
     def flush_pending_metrics(self) -> None:
         """Register a metrics delta still trailing its epoch's commit
-        (write-behind sink). Called automatically at run() end and on the
-        first metrics read; a metrics-only snapshot carries every other
-        table (and the run meta) forward unchanged."""
+        (write-behind sink). Called automatically when run() returns or
+        raises, and on the first metrics read; a metrics-only snapshot
+        carries every other table (and the run meta) forward unchanged."""
         if self._pending_metrics is None:
             return
         path, future, pins = self._pending_metrics

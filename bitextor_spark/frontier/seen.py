@@ -1,22 +1,21 @@
-"""Partitioned Bloom URL-seen structure (C5) — the frontier-dedup scale path.
+"""Partitioned Bloom frontier-dedup operator (C5) — stand-alone; the crawl
+engine does not call it.
 
-Heritrix's BdbUriUniqFilter (crawler-beans.cxml:430-433) is a disk-backed
-exact set. At 10^10 URLs an exact anti-join against the full frontier
-shuffles every candidate; the Bloom shards cut that: candidates that are
-*definitely new* (any bit clear) skip the exact join entirely, and only the
-"maybe seen" residue (true hits + ~1% false positives at 10 bits/key) takes
-the exact anti-join — so the engine stays exact while the expensive join
-shrinks by the novelty rate. No false negatives by construction.
+The engine's URL-seen check is exact, like Heritrix's BdbUriUniqFilter
+(crawler-beans.cxml:430-433): an anti-join of the epoch's candidates
+against the frontier's url_hash set (frontier/engine.py). This module is
+the approximate frontier-dedup structure measured on its own: build shard
+bitmaps from a key set, then flag probe keys as *maybe seen* (true hits +
+~1% false positives at 10 bits/key) or *definitely new*. No false
+negatives by construction.
 
 Sharding is by ``pmod(url_hash, n_shards)`` — uniform by hash, so a
-mega-domain cannot hot-spot a shard (this is the salted/sharded layout the
-north rule asks for: host-derived keys alone would put a whole mega-host
-in one shard; hashing the full URL is the degenerate-salt limit that
-provably balances). Each shard is one binary blob row; membership tests
-vectorize in numpy over Arrow buffers, via one of two exact-equivalent
-plans picked by total bitmap size (engine config ``bloom_broadcast_bytes``):
-bounded bitmaps broadcast once per compaction and probe NARROW
-(mapInArrow, no exchange); north-star multi-GB bitmaps stream through a
+mega-domain cannot hot-spot a shard (host-derived keys alone would put a
+whole mega-host in one shard; hashing the full URL is the degenerate-salt
+limit that provably balances). Each shard is one binary blob row;
+membership tests vectorize in numpy over Arrow buffers, via one of two
+exact-equivalent plans: bounded bitmaps broadcast once and probe NARROW
+(mapInArrow, no exchange); multi-GB bitmaps stream through a
 cogrouped-Arrow join per shard instead.
 """
 
@@ -155,9 +154,8 @@ def flag_maybe_seen(
 def broadcast_blooms(spark: SparkSession, blooms: DataFrame):
     """Collect the shard blobs and broadcast ``{shard: bytes}``.
 
-    The caller gates this by total bitmap bytes (config
-    ``bloom_broadcast_bytes``): bounded-size bloom tables ride one
-    broadcast per compaction instead of a per-epoch cogroup exchange; at
+    The caller gates this by total bitmap bytes: bounded-size bloom
+    tables ride one broadcast instead of a cogroup exchange per probe; at
     north-star scale (multi-GB bitmaps) the cogroup path stays."""
     rows = blooms.select("shard", "bloom").collect()
     return spark.sparkContext.broadcast(

@@ -17,8 +17,8 @@ RFC-3986 ASCII common case (codegen, never throws) with a
 ``try_parse_url`` fallback for the residue (unicode paths, IPv6 hosts,
 invalid URLs → NULL); segment depth becomes split-arithmetic and the
 pathological-repeat rule becomes a single backreference regex. Exact
-parity with the parse_url/HOF originals (kept below as ``*_hof`` twins)
-is asserted in tests/test_scope_fast.py over adversarial URL corpora.
+parity with the parse_url/HOF originals (rebuilt there as references) is
+asserted in tests/test_scope_fast.py over adversarial URL corpora.
 """
 
 from __future__ import annotations
@@ -84,50 +84,9 @@ def _has_repeat_run_col(path_col: Column, max_repetitions: int) -> Column:
     return path_col.rlike(pat)
 
 
-def path_segments(url_col: Column) -> Column:
-    return F.filter(
-        F.split(F.parse_url(url_col, F.lit("PATH")), "/"), lambda s: s != ""
-    )
-
-
 def path_depth_col(url_col: Column) -> Column:
     """Non-empty path segment count of a URL (fast path extraction)."""
     return _depth_of_path(url_path_col(url_col))
-
-
-def path_depth_hof_col(url_col: Column) -> Column:
-    """The original parse_url + HOF-filter depth — kept as the reference
-    twin for tests/test_scope_fast.py (throws on invalid URLs)."""
-    return F.size(path_segments(url_col))
-
-
-def max_run_hof_col(url_col: Column) -> Column:
-    """Longest run of identical adjacent path segments — the original HOF
-    aggregate, kept as the reference twin for the parity test.
-
-    aggregate(segments, (prev, run, best), ...) — the 'pathological repeats'
-    rule (maxRepetitions, crawler-beans.cxml:168-171) without a UDF.
-    """
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
-    )
-
-    def step(acc, seg):
-        new_run = F.when(seg == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            seg.alias("prev"),
-            new_run.alias("run"),
-            F.greatest(acc["best"], new_run).alias("best"),
-        )
-
-    return F.aggregate(path_segments(url_col), init, step, lambda acc: acc["best"])
-
-
-# the public name keeps the original (reference) semantics; scope itself
-# only ever needs the boolean, which the regex answers without a HOF
-max_run_col = max_run_hof_col
 
 
 def blacklist_col(host_col: Column, cfg: CrawlConfig) -> Column:
@@ -153,17 +112,6 @@ def regex_reject_col(url_col: Column, cfg: CrawlConfig) -> Column:
     for pat in cfg.reject_url_regexes:
         out = out | url_col.rlike(pat)
     return out
-
-
-def prerequisite_col(url_col: Column, cfg: CrawlConfig) -> Column:
-    """Prerequisite URIs (robots.txt-style) are always fetchable."""
-    path = F.coalesce(url_path_col(url_col), F.lit("/"))
-    return path.isin(*cfg.prerequisite_paths)
-
-
-def robots_disallowed_col(url_col: Column, prefixes_col: Column) -> Column:
-    path = F.coalesce(url_path_col(url_col), F.lit("/"))
-    return _robots_disallowed_of_path(path, prefixes_col)
 
 
 def _robots_disallowed_of_path(path_col: Column, prefixes_col: Column) -> Column:

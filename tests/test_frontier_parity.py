@@ -19,11 +19,12 @@ from bitextor_spark.config import CrawlConfig, WorldConfig
 from bitextor_spark.frontier.engine import FrontierEngine
 from bitextor_spark.frontier.simulator import simulate
 from bitextor_spark.frontier.world import small_world, world_to_dfs
+from bitextor_spark.sources.snapshots import SnapshotCatalog
 
 N_EPOCHS = 6
 
 CFG = CrawlConfig(
-    max_epochs=N_EPOCHS, max_retries=2, replenish_per_epoch=300, num_host_shards=8
+    max_epochs=N_EPOCHS, max_retries=2, replenish_per_epoch=300
 )
 WORLD_CFG = WorldConfig(n_hosts=6, n_pages=150)
 
@@ -67,7 +68,7 @@ def engine_run(spark, world, no_aqe):
     dfs = world_to_dfs(spark, world)
     root = tempfile.mkdtemp(prefix="frontier_parity_")
     eng = FrontierEngine(
-        spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"], use_bloom=True
+        spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"]
     )
     eng.run(max_epochs=N_EPOCHS)
     yield eng
@@ -130,7 +131,6 @@ def test_resume_from_snapshot(spark, world, sim, no_aqe):
     try:
         eng1 = FrontierEngine(
             spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng1.run(max_epochs=2)
         assert int(eng1.meta()["epoch"]) == 2
@@ -143,7 +143,6 @@ def test_resume_from_snapshot(spark, world, sim, no_aqe):
 
         eng2 = FrontierEngine(
             spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng2.run(max_epochs=N_EPOCHS)  # resumes from snapshot, runs 4 more
         assert _log_tuples_engine(eng2) == _log_tuples_sim(sim)
@@ -185,13 +184,12 @@ def test_priority_queue_parity(spark, no_aqe):
     teeth)."""
     cfg_p = CrawlConfig(
         max_epochs=4, max_retries=1, replenish_per_epoch=200,
-        num_host_shards=8, queue_order="priority", priority_floor=5e-3,
+        queue_order="priority", priority_floor=5e-3,
     )
     w = small_world(WorldConfig(n_hosts=5, n_pages=120, seed=99))
     sim_p = simulate(w, cfg_p)
     sim_bfs = simulate(w, CrawlConfig(
         max_epochs=4, max_retries=1, replenish_per_epoch=200,
-        num_host_shards=8,
     ))
     order_p = [(r.url_canon) for r in sim_p.fetch_log]
     order_b = [(r.url_canon) for r in sim_bfs.fetch_log]
@@ -206,7 +204,6 @@ def test_priority_queue_parity(spark, no_aqe):
     try:
         eng = FrontierEngine(
             spark, cfg_p, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng.run(max_epochs=4)
         assert _log_tuples_engine(eng) == _log_tuples_sim(sim_p)
@@ -214,10 +211,18 @@ def test_priority_queue_parity(spark, no_aqe):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_compaction_cadence_invariance(spark, world, sim, no_aqe):
+@pytest.mark.parametrize("delta_broadcast_rows", [None, 0],
+                         ids=["broadcast", "shuffle"])
+def test_compaction_cadence_invariance(spark, world, sim, no_aqe,
+                                       delta_broadcast_rows):
     """MOR frontier storage: the crawl is byte-identical whatever the
     compaction cadence, including a resume that lands between two
-    compactions (the resumed engine reads base + delta logs)."""
+    compactions (the resumed engine reads base + delta logs).
+
+    Run twice: with the default delta broadcast gate, and with the gate
+    at 0 and size-based auto-broadcast off, so every delta-log key set
+    (the seen check's delta anti-join among them) joins as a shuffle and
+    the delta latest-wins takes the groupBy form."""
     import dataclasses
 
     # ratio trigger off (it would compact every epoch at this scale and
@@ -225,19 +230,23 @@ def test_compaction_cadence_invariance(spark, world, sim, no_aqe):
     cfg_c = dataclasses.replace(
         CFG, frontier_compact_epochs=2, compact_delta_ratio=float("inf")
     )
+    prev_auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if delta_broadcast_rows is not None:
+        cfg_c = dataclasses.replace(
+            cfg_c, delta_broadcast_rows=delta_broadcast_rows
+        )
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     dfs = world_to_dfs(spark, world)
     root = tempfile.mkdtemp(prefix="frontier_compact_")
     try:
         eng1 = FrontierEngine(
             spark, cfg_c, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng1.run(max_epochs=3)  # epoch 2 compacted, epoch 3 is a delta
         m = eng1.catalog.load_manifest()
         assert "frontier_delta" in m["tables"], "resume point must have deltas"
         eng2 = FrontierEngine(
             spark, cfg_c, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng2.run(max_epochs=N_EPOCHS)
         assert _log_tuples_engine(eng2) == _log_tuples_sim(sim)
@@ -246,6 +255,43 @@ def test_compaction_cadence_invariance(spark, world, sim, no_aqe):
         # post-compaction manifest carries no delta log (epoch 6 compacted)
         m = eng2.catalog.load_manifest()
         assert "frontier_delta" not in m["tables"]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_auto)
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_run_flushes_metrics_when_an_epoch_raises(spark, world, no_aqe,
+                                                  monkeypatch):
+    """run() registers the last committed epoch's write-behind metrics
+    even when a later epoch raises: the staged metrics file is known only
+    to the engine process, so skipping the flush would orphan it."""
+    dfs = world_to_dfs(spark, world)
+    root = tempfile.mkdtemp(prefix="frontier_flush_")
+    try:
+        eng = FrontierEngine(
+            spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
+        )
+        real_run_epoch = eng.run_epoch
+        done: list = []
+
+        def failing_second_epoch():
+            if done:
+                raise RuntimeError("injected epoch failure")
+            done.append(real_run_epoch())
+            return done[-1]
+
+        monkeypatch.setattr(eng, "run_epoch", failing_second_epoch)
+        with pytest.raises(RuntimeError, match="injected epoch failure"):
+            eng.run(max_epochs=N_EPOCHS)
+        assert int(eng.meta()["epoch"]) == 1  # epoch 0 committed
+        # read the catalog directly: eng.metrics() would flush by itself
+        metrics = SnapshotCatalog(root).read(
+            spark, "metrics", schema=FrontierEngine._TABLE_SCHEMAS["metrics"]
+        )
+        assert metrics is not None, "epoch 0 metrics were never registered"
+        rows = metrics.collect()
+        assert {r.epoch for r in rows} == {0}
+        assert sum(r.fetched for r in rows) == done[0].fetched > 0
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -301,7 +347,7 @@ def test_robots_ttl_refresh_parity(spark, no_aqe):
     root = tempfile.mkdtemp(prefix="frontier_ttl_")
     try:
         args = (spark, ttl_cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"])
-        kw = {"use_bloom": True, "robots_versions": dfs["robots_versions"]}
+        kw = {"robots_versions": dfs["robots_versions"]}
         eng1 = FrontierEngine(*args, **kw)
         eng1.run(max_epochs=3)  # stop mid-crawl: cache is warm + committed
         eng2 = FrontierEngine(*args, **kw)  # resume from snapshot
@@ -354,7 +400,6 @@ def test_politeness_overlay_parity(spark, no_aqe):
     try:
         eng = FrontierEngine(
             spark, ov_cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng.run(max_epochs=N_EPOCHS)
         assert _log_tuples_engine(eng) == _log_tuples_sim(ov_sim)
@@ -387,7 +432,6 @@ def test_rank_regime_parity(spark, world, no_aqe, monkeypatch):
         try:
             eng = FrontierEngine(
                 spark, cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-                use_bloom=True,
             )
             eng.run(max_epochs=N_EPOCHS)
             return _log_tuples_engine(eng)

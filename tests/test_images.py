@@ -73,10 +73,10 @@ def test_engine_payload_verification(spark):
                 F.col("caption")
             ),
         )
-        cfg = CrawlConfig(max_epochs=3, max_retries=1, num_host_shards=4)
+        cfg = CrawlConfig(max_epochs=3, max_retries=1)
         eng = FrontierEngine(
             spark, cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True, images=images, verify_payloads=True,
+            images=images, verify_payloads=True,
         )
         eng.run(max_epochs=3)
         log = eng.fetch_log().collect()

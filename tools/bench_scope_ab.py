@@ -1,6 +1,6 @@
 """Decompose the discovery stage's cost: scope expressions vs winner-agg.
 
-The r5 stage profile (tools/profile_crawl.py) shows the epoch's largest
+The r5 stage profile shows the epoch's largest
 stage is the discovery tail — resolver → apply_scope → groupBy(url_canon)
 min(struct) — burning ~400 s of task time at 16 cores on the fat epoch
 while the resolver alone is ~1.3 s.  Two suspects remain inside that
